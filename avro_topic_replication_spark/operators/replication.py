@@ -15,17 +15,27 @@ Spark mapping implemented here:
 |    |                                    | cluster, maxOffsetsPerTrigger)   |
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
-| R3 | KafkaAvroDeserializer              | Arrow-batched decode against a   |
-|    | (application.yml:12)               | plan-time registry snapshot      |
+| R3 | KafkaAvroDeserializer              | replicate_transform: ONE Arrow-  |
+|    | (application.yml:12)               | batched pass decodes against a   |
+|    |                                    | plan-time registry snapshot and  |
+|    |                                    | classifies every row: error NULL |
+|    |                                    | or unknown_schema / decode_error |
+|    |                                    | / missing_id                     |
 | R4 | consumerRecord.get("id") (:71)     | record["id"] in the same pass    |
 | R5 | re-key with id.toString() (:70-71) | key = Confluent-framed Avro      |
 |    |                                    | string of id (serde parity)      |
-| R6 | KafkaAvroSerializer + auto-register| encode + register() at plan time |
-|    | (application.yml:15-16,README:27)  | against the target registry      |
+| R6 | KafkaAvroSerializer + auto-register| encode in the same pass; one     |
+|    | (application.yml:15-16,README:27)  | plan-time register() step        |
+|    |                                    | (plan_routing) for both policies |
 | R7 | executeInTransaction (:66-78)      | foreachBatch: write data, then   |
-| R8 | future.get barrier → abort (:80-94)| atomically create commit marker; |
-|    |                                    | any task failure fails the batch |
-|    |                                    | before the marker exists         |
+|    |                                    | atomically create commit marker  |
+|    |                                    | (one helper for both sinks)      |
+| R8 | future.get barrier → abort (:80-94)| strict: an in-plan guard raises  |
+|    |                                    | on the first non-NULL error, the |
+|    |                                    | task fails the batch before the  |
+|    |                                    | marker exists; DLQ: error rows   |
+|    |                                    | go to the dead-letter sink under |
+|    |                                    | the same marker                  |
 | R9 | ack after commit (:99-100)         | checkpoint advances only after   |
 |    |                                    | foreachBatch returns             |
 
@@ -115,8 +125,16 @@ def kafka_source_options(bootstrap: str, topic: str) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# R3–R6: decode → re-key → encode, one Arrow-batched pass
+# R3–R6: decode → re-key → encode, one classifying Arrow-batched pass
 # ---------------------------------------------------------------------------
+# The kernel's output: the envelope plus the row's error class (NULL for a
+# replicated record). A fresh field list: StructType.add would mutate the
+# shared KAFKA_ENVELOPE.
+DLQ_ENVELOPE = StructType(
+    KAFKA_ENVELOPE.fields + [StructField("error", StringType(), True)]
+)
+
+
 def replicate_transform(
     env: DataFrame,
     schemas_by_id: dict,
@@ -135,71 +153,15 @@ def replicate_transform(
 
     One mapInPandas pass — the distributed analog of the reference's
     single listener loop (ReplicationApplication.java:63-78), preserving
-    (partition, offset) passthrough for downstream dedup/audit. A record
-    without ``id`` raises, failing the whole batch before any commit —
-    the NPE→transaction-abort behavior of the reference (§3.1 step 6).
-    """
-    snapshot = dict(schemas_by_id)
-    mapping = dict(id_mapping)
-
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, values = [], []
-            for raw in pdf["value"]:
-                src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
-                if not isinstance(record, dict) or "id" not in record or record["id"] is None:
-                    raise ValueError(
-                        "record has no 'id' field - aborting batch "
-                        "(reference parity: ReplicationApplication.java:71 NPE "
-                        "aborts the transaction)"
-                    )
-                rid = str(record["id"])
-                keys.append(
-                    avro_codec.serialize_confluent(rid, STRING_SCHEMA, key_schema_id)
-                )
-                values.append(
-                    avro_codec.serialize_confluent(
-                        record, snapshot[src_id], mapping[src_id]
-                    )
-                )
-            out = pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": values,
-                    "topic": target_topic,
-                    "partition": pdf["partition"],
-                    "offset": pdf["offset"],
-                    "timestamp": pdf["timestamp"],
-                }
-            )
-            yield out
-
-    return env.mapInPandas(transform, schema=KAFKA_ENVELOPE)
-
-
-def replicate_transform_tolerant(
-    env: DataFrame,
-    schemas_by_id: dict,
-    target_topic: str,
-    key_schema_id: int,
-    id_mapping: dict,
-) -> DataFrame:
-    """Dead-letter variant of ``replicate_transform``: instead of the
-    reference's abort-batch-on-bad-record semantics (the NPE →
-    transaction-abort of ReplicationApplication.java:71, which
-    ``replicate_transform`` mirrors), records that cannot be decoded or
-    re-keyed are ROUTED — the envelope passes through with NULL
-    key/value plus an ``error`` classification, and good records
-    replicate normally. This is the tolerant production mode every DLQ
-    deployment runs (bad records land on a dead-letter topic with
-    diagnostics; the pipeline keeps its throughput).
-
-    Error classes: ``unknown_schema`` (frame carries a schema id absent
-    from the plan-time registry snapshot — KeyError), ``decode_error``
-    (malformed frame/payload), ``missing_id`` (decoded record lacks the
-    re-key field). Same one-Arrow-pass dataflow as the strict transform;
-    the split into main/DLQ sinks is a downstream ``filter`` each
-    (both partition-local, no extra shuffle).
+    (partition, offset) passthrough for downstream dedup/audit. Every row
+    is classified into the ``error`` column of ``DLQ_ENVELOPE``: NULL for
+    a replicated record, else ``unknown_schema`` (frame carries a schema
+    id absent from the plan-time registry snapshot — KeyError),
+    ``decode_error`` (malformed frame/payload) or ``missing_id`` (decoded
+    record lacks the re-key field); such rows pass through with NULL
+    key/value. The failure policy is applied downstream of this pass:
+    ``plan_replication`` aborts the batch on the first classified row,
+    the DLQ paths split on ``error`` (both partition-local, no shuffle).
     """
     snapshot = dict(schemas_by_id)
     mapping = dict(id_mapping)
@@ -250,12 +212,34 @@ def replicate_transform_tolerant(
                 }
             )
 
-    # StructType.add mutates in place — build a fresh schema instead of
-    # appending to the shared module-level envelope.
-    schema = StructType(
-        KAFKA_ENVELOPE.fields + [StructField("error", StringType())]
-    )
-    return env.mapInPandas(transform, schema=schema)
+    return env.mapInPandas(transform, schema=DLQ_ENVELOPE)
+
+
+def plan_routing(
+    env: DataFrame,
+    source_registry: MockSchemaRegistry,
+    target_registry: MockSchemaRegistry,
+    target_topic: str,
+    value_schema=None,
+) -> DataFrame:
+    """Plan-time registry work (R6 auto-registration, README.adoc:27
+    parity) + the classifying transform: snapshot the source registry for
+    decode, propagate EVERY known source schema into the target registry
+    (the auto-registration the Confluent serde does lazily, done eagerly
+    at plan time), and build ``replicate_transform`` with the id mapping.
+    Returns ``DLQ_ENVELOPE`` rows. ``value_schema`` seeds an empty source
+    registry (direct batch use); otherwise registration is driven by the
+    snapshot."""
+    key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
+    snapshot = source_registry.snapshot()
+    if value_schema is not None and not snapshot:
+        source_registry.register(f"{target_topic}-value", value_schema)
+        snapshot = source_registry.snapshot()
+    id_mapping = {
+        src_id: target_registry.register(f"{target_topic}-value", schema)
+        for src_id, schema in snapshot.items()
+    }
+    return replicate_transform(env, snapshot, target_topic, key_id, id_mapping)
 
 
 def plan_replication(
@@ -265,30 +249,21 @@ def plan_replication(
     target_topic: str,
     value_schema=None,
 ) -> DataFrame:
-    """Plan-time registry work (R6 auto-registration, README.adoc:27
-    parity) + the transform: snapshot the source registry for decode,
-    propagate EVERY known source schema into the target registry (the
-    auto-registration the Confluent serde does lazily, done eagerly at
-    plan time), and build the distributed transform with the id mapping.
-    ``value_schema`` is accepted for API compatibility; registration is
-    driven by the snapshot."""
-    key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
-    snapshot = source_registry.snapshot()
-    if value_schema is not None and not snapshot:
-        # Source registry empty (direct batch use): seed from the given schema.
-        sid = source_registry.register(f"{target_topic}-value", value_schema)
-        snapshot = source_registry.snapshot()
-    id_mapping = {
-        src_id: target_registry.register(f"{target_topic}-value", schema)
-        for src_id, schema in snapshot.items()
-    }
-    return replicate_transform(
-        env,
-        snapshot,
-        target_topic,
-        key_id,
-        id_mapping,
+    """The strict pipeline: ``plan_routing`` plus an in-plan guard that
+    raises on the first row with a non-NULL ``error``, failing the whole
+    batch before any commit — the NPE→transaction-abort behavior of the
+    reference (ReplicationApplication.java:71, §3.1 step 6). Returns
+    ``KAFKA_ENVELOPE`` rows."""
+    out = plan_routing(env, source_registry, target_registry, target_topic, value_schema)
+    replicated = F.when(F.col("error").isNull(), True).otherwise(
+        F.raise_error(
+            F.format_string(
+                "record at partition %d offset %d: %s - aborting batch",
+                "partition", "offset", "error",
+            )
+        )
     )
+    return out.where(replicated).drop("error")
 
 
 # ---------------------------------------------------------------------------
@@ -298,25 +273,29 @@ def committed_marker(target_dir: str, batch_id: int) -> str:
     return os.path.join(target_dir, "commits", str(batch_id))
 
 
-def batch_writer(target_dir: str):
-    """foreachBatch body: write-then-commit-marker, idempotent on replay.
+def _write_data(df: DataFrame, topic_dir: str, batch_id: int) -> None:
+    df.write.mode("overwrite").parquet(os.path.join(topic_dir, "data", str(batch_id)))
 
-    - data lands in data/<batch_id>/ (task failures abort the whole write
-      — the R8 barrier);
-    - the commit marker is created atomically AFTER a successful write
-      (R7 transaction commit);
+
+def _marker_committed(marker_dir: str, write_data):
+    """foreachBatch body around ``write_data(batch_df, batch_id)``:
+    write-then-commit-marker, idempotent on replay.
+
     - a replayed batch (crash between marker and checkpoint ack) sees its
       marker and skips — effectively-exactly-once downstream;
+    - any task failure in ``write_data`` aborts the batch before the
+      marker exists (the R8 barrier);
+    - the marker is created atomically AFTER a successful write (R7
+      transaction commit);
     - Structured Streaming acks the checkpoint only after this returns
       (R9 post-commit offset ack).
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = committed_marker(target_dir, batch_id)
+        marker = committed_marker(marker_dir, batch_id)
         if os.path.exists(marker):
             return  # replay of a committed batch: idempotent skip
-        data_dir = os.path.join(target_dir, "data", str(batch_id))
-        batch_df.write.mode("overwrite").parquet(data_dir)
+        write_data(batch_df, batch_id)
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
@@ -324,6 +303,14 @@ def batch_writer(target_dir: str):
         os.rename(tmp, marker)  # atomic commit point
 
     return write
+
+
+def batch_writer(target_dir: str):
+    """foreachBatch body of the strict pipeline: the batch lands in
+    data/<batch_id>/ under ``target_dir``, then its commit marker."""
+    return _marker_committed(
+        target_dir, lambda df, batch_id: _write_data(df, target_dir, batch_id)
+    )
 
 
 def dlq_batch_writer(main_dir: str, dlq_dir: str):
@@ -335,26 +322,34 @@ def dlq_batch_writer(main_dir: str, dlq_dir: str):
     the whole batch into both sinks idempotently (the R7/R8 semantics of
     ``batch_writer`` extended to two destinations)."""
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        marker = committed_marker(main_dir, batch_id)
-        if os.path.exists(marker):
-            return  # replay of a committed batch: idempotent skip
+    def split(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)  # split reads it twice
-        good = batch_df.filter(F.col("error").isNull()).drop("error")
-        bad = batch_df.filter(F.col("error").isNotNull())
-        good.write.mode("overwrite").parquet(
-            os.path.join(main_dir, "data", str(batch_id))
-        )
-        bad.write.mode("overwrite").parquet(
-            os.path.join(dlq_dir, "data", str(batch_id))
-        )
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("committed")
-        os.rename(tmp, marker)  # atomic commit point for BOTH sinks
+        _write_data(batch_df.filter(F.col("error").isNull()).drop("error"), main_dir, batch_id)
+        _write_data(batch_df.filter(F.col("error").isNotNull()), dlq_dir, batch_id)
 
-    return write
+    return _marker_committed(main_dir, split)
+
+
+def _drain(out: DataFrame, writer, checkpoint_dir: str, timeout_sec: float) -> None:
+    """Run ``out`` through the foreachBatch ``writer`` with an
+    availableNow trigger: process what the source holds at start, then
+    stop. A run still going after ``timeout_sec`` is stopped and raises
+    ``TimeoutError``; a batch without its marker replays on the next run
+    over the same checkpoint."""
+    q = (
+        out.writeStream.foreachBatch(writer)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        finished = q.awaitTermination(timeout_sec)
+    finally:
+        q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"replication stream did not finish within {timeout_sec}s; stopped"
+        )
 
 
 def replicate_stream_dlq(
@@ -370,37 +365,18 @@ def replicate_stream_dlq(
     corrupt=None,
     timeout_sec: int = 120,
 ) -> None:
-    """The R1–R9 streaming pipeline in tolerant mode: same source and
-    checkpoint mechanics as ``replicate_stream``, but records flow
-    through ``replicate_transform_tolerant`` and the two-sink
-    ``dlq_batch_writer``. ``corrupt`` optionally maps the envelope
-    DataFrame before the transform (test harnesses inject deterministic
-    corruption there)."""
+    """The R1–R9 streaming pipeline in tolerant mode: same source,
+    transform and checkpoint mechanics as ``replicate_stream``, without
+    the strict guard — records flow from ``plan_routing`` into the
+    two-sink ``dlq_batch_writer``. ``corrupt`` optionally maps the
+    envelope DataFrame before the transform (test harnesses inject
+    deterministic corruption there). Raises ``TimeoutError`` like
+    ``replicate_stream``."""
     env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
     if corrupt is not None:
         env = corrupt(env)
-    key_id = target_registry.register(f"{target_topic}-key", STRING_SCHEMA)
-    snapshot = source_registry.snapshot()
-    if value_schema is not None and not snapshot:
-        source_registry.register(f"{target_topic}-value", value_schema)
-        snapshot = source_registry.snapshot()
-    id_mapping = {
-        src_id: target_registry.register(f"{target_topic}-value", schema)
-        for src_id, schema in snapshot.items()
-    }
-    out = replicate_transform_tolerant(
-        env, snapshot, target_topic, key_id, id_mapping
-    )
-    q = (
-        out.writeStream.foreachBatch(dlq_batch_writer(main_dir, dlq_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        q.stop()
+    out = plan_routing(env, source_registry, target_registry, target_topic, value_schema)
+    _drain(out, dlq_batch_writer(main_dir, dlq_dir), checkpoint_dir, timeout_sec)
 
 
 def read_committed(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -471,23 +447,17 @@ def replicate_stream(
     """The full R1–R9 streaming pipeline over a file-backed topic
     simulation (envelope parquet dir standing in for the Kafka source —
     swap the first line for format("kafka") + kafka_source_options on a
-    real cluster; everything downstream is identical)."""
+    real cluster; everything downstream is identical). Raises
+    ``TimeoutError`` if the run has not finished after ``timeout_sec``."""
     if listener is not None:
         spark.streams.addListener(listener)
-    env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
-    out = plan_replication(
-        env, source_registry, target_registry, target_topic, value_schema
-    )
-    q = (
-        out.writeStream.foreachBatch(batch_writer(target_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination(timeout_sec)
+        env = spark.readStream.schema(KAFKA_ENVELOPE).parquet(source_dir)
+        out = plan_replication(
+            env, source_registry, target_registry, target_topic, value_schema
+        )
+        _drain(out, batch_writer(target_dir), checkpoint_dir, timeout_sec)
     finally:
-        q.stop()
         if listener is not None:
             # listener events ride an async bus; drain until the recorded
             # batch count is stable across a polling interval (not merely

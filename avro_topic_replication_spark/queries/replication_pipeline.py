@@ -50,6 +50,25 @@ def _staged_source(spark: SparkSession, sf_dir: str, registry: MockSchemaRegistr
     return src_dir
 
 
+def _corrupt_frames(env: DataFrame) -> DataFrame:
+    """Deterministic in-plan corruption of the DLQ queries: offset % 7 == 0
+    → frame truncated to 3 bytes (an unparseable frame), offset % 7 == 3
+    → schema-id field rewritten to 999 (a registry miss)."""
+    return env.withColumn(
+        "value",
+        F.when(F.col("offset") % 7 == 0, F.expr("substring(value, 1, 3)"))
+        .when(
+            F.col("offset") % 7 == 3,
+            F.concat(
+                F.expr("substring(value, 1, 1)"),
+                F.lit(bytes([0, 0, 3, 231])),  # schema id 999
+                F.expr("substring(value, 6, 2147483647)"),
+            ),
+        )
+        .otherwise(F.col("value")),
+    )
+
+
 @query(
     "replication_batch_roundtrip",
     oracle="""
@@ -250,13 +269,11 @@ def replication_evolved_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter routing, oracle-verified: the clean nation-derived
-    source topic is corrupted IN-PLAN deterministically (offset % 7 == 0
-    → frame truncated to 3 bytes, an unparseable frame; offset % 7 == 3
-    → schema-id field rewritten to 999, a registry miss), then the
-    TOLERANT replicate transform (operators/replication.py
-    ``replicate_transform_tolerant``) routes each record: good ones
-    re-key/re-encode as usual, bad ones pass through with an error
-    class. The query emits per-disposition accounting, with the good
+    source topic is corrupted IN-PLAN deterministically
+    (``_corrupt_frames``), then the classifying replicate transform
+    (operators/replication.py ``plan_routing``, without the strict
+    guard) routes each record: good ones re-key/re-encode as usual, bad
+    ones pass through with an error class. The query emits per-disposition accounting, with the good
     rows' decoded ids counted through the full consumer decode — so the
     oracle verifies BOTH that exactly the corrupted offsets land in the
     DLQ with the right classification AND that the surviving records
@@ -264,8 +281,9 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The reference's semantics on a bad record is abort-the-batch
     (ReplicationApplication.java:71 NPE → transaction abort; mirrored by
-    ``replicate_transform`` + pytest test_missing_id_aborts_batch); this
-    query is the DLQ production mode layered on the same Arrow pass.
+    the strict guard of ``plan_replication`` + pytest
+    test_missing_id_aborts_batch); this query is the DLQ production mode
+    of the same Arrow pass.
     Scale shape: corruption + routing are per-row map work; the
     accounting is one 3-group aggregate.
     """
@@ -274,35 +292,8 @@ def replication_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt_reg = MockSchemaRegistry.get_scope(f"tgt-{scope}")
     try:
         src_dir = _staged_source(spark, sf_dir, src_reg)
-        env = spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir)
-        corrupted_value = (
-            F.when(
-                F.col("offset") % 7 == 0,
-                F.expr("substring(value, 1, 3)"),
-            )
-            .when(
-                F.col("offset") % 7 == 3,
-                F.concat(
-                    F.expr("substring(value, 1, 1)"),
-                    F.lit(bytes([0, 0, 3, 231])),  # schema id 999
-                    F.expr("substring(value, 6, 2147483647)"),
-                ),
-            )
-            .otherwise(F.col("value"))
-        )
-        env = env.withColumn("value", corrupted_value)
-        # propagate the source schema to the target registry (the good
-        # records' path), then run the tolerant transform
-        sid, _ = src_reg.latest("source-topic-a-value")
-        tgt_value_id = tgt_reg.register("target-topic-b-value", R.FOO_SCHEMA)
-        key_id = tgt_reg.register("target-topic-b-key", R.STRING_SCHEMA)
-        out = R.replicate_transform_tolerant(
-            env,
-            src_reg.snapshot(),
-            "target-topic-b",
-            key_id,
-            {sid: tgt_value_id},
-        )
+        env = _corrupt_frames(spark.read.schema(R.KAFKA_ENVELOPE).parquet(src_dir))
+        out = R.plan_routing(env, src_reg, tgt_reg, "target-topic-b", R.FOO_SCHEMA)
         good = R.decode_envelope(
             out.filter(F.col("error").isNull()).drop("error"),
             tgt_reg.snapshot(),
@@ -340,7 +331,7 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tolerant R1–R9 pipeline END TO END in streaming mode: the
     envelope stream is corrupted deterministically in-plan (the
     replication_dlq_routing classes), replicated through
-    ``replicate_transform_tolerant``, and committed through the
+    ``plan_routing`` without the strict guard, and committed through the
     two-sink batch-atomic ``dlq_batch_writer`` (one marker covers the
     main write AND the dead-letter write). The query then reads BOTH
     committed sinks back and emits per-disposition accounting with the
@@ -361,36 +352,14 @@ def replication_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         dlq_dir = os.path.join(base, "target-topic-b-dlq")
         ckpt = os.path.join(base, "ckpt")
 
-        def corrupt(env: DataFrame) -> DataFrame:
-            return env.withColumn(
-                "value",
-                F.when(
-                    F.col("offset") % 7 == 0, F.expr("substring(value, 1, 3)")
-                )
-                .when(
-                    F.col("offset") % 7 == 3,
-                    F.concat(
-                        F.expr("substring(value, 1, 1)"),
-                        F.lit(bytes([0, 0, 3, 231])),
-                        F.expr("substring(value, 6, 2147483647)"),
-                    ),
-                )
-                .otherwise(F.col("value")),
-            )
-
         R.replicate_stream_dlq(
             spark, src_dir, main_dir, dlq_dir, src_reg, tgt_reg,
-            "target-topic-b", R.FOO_SCHEMA, ckpt, corrupt=corrupt,
+            "target-topic-b", R.FOO_SCHEMA, ckpt, corrupt=_corrupt_frames,
         )
         good = R.decode_envelope(
             R.read_committed(spark, main_dir), tgt_reg.snapshot(), R.FOO_SCHEMA
         )
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        dlq_schema = StructType(
-            R.KAFKA_ENVELOPE.fields + [StructField("error", StringType())]
-        )  # fresh schema — StructType.add mutates the shared envelope
-        bad = spark.read.schema(dlq_schema).parquet(
+        bad = spark.read.schema(R.DLQ_ENVELOPE).parquet(
             os.path.join(dlq_dir, "data", "*")
         )
         acc_bad = bad.groupBy(F.col("error").alias("disposition")).agg(

@@ -8,11 +8,13 @@ record on the target topic whose key == id and whose value is
 field-equal to the input (:118-124), with separate source/target mock
 registries (:55-56) and schema auto-registration on the target
 (README.adoc:27). Plus codec round-trips (hypothesis), batch-abort on
-missing id, and idempotent replay of a committed batch.
+each bad-record class, DLQ classification, timeouts, and idempotent
+replay of a committed batch.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import uuid
 
@@ -170,23 +172,133 @@ def test_schema_auto_registered_on_target(spark, dirs):
     assert kschema == "string"
 
 
-def test_missing_id_aborts_batch(spark, dirs):
-    """ReplicationApplication.java:71 NPE parity: a record without id
-    fails the whole batch; nothing is committed (R8 all-or-nothing)."""
+NOID_SCHEMA = {
+    "type": "record", "name": "NoId",
+    "fields": [{"name": "other", "type": "string"}],
+}
+
+
+def _noid_frame(reg):
+    sid = reg.register("source-topic-a-value", NOID_SCHEMA)
+    return avro_codec.serialize_confluent({"other": "x"}, NOID_SCHEMA, sid)
+
+
+def _foo_frame(reg):
+    sid = reg.register("source-topic-a-value", R.FOO_SCHEMA)
+    return avro_codec.serialize_confluent({"id": "1", "name": None}, R.FOO_SCHEMA, sid)
+
+
+def _unknown_schema_frame(reg):
+    _foo_frame(reg)  # the registry knows Foo, but the frame names id 999
+    return avro_codec.serialize_confluent({"id": "1", "name": None}, R.FOO_SCHEMA, 999)
+
+
+def _truncated_frame(reg):
+    return _foo_frame(reg)[:3]
+
+
+@pytest.mark.parametrize(
+    "error, make_frame",
+    [
+        ("missing_id", _noid_frame),
+        ("unknown_schema", _unknown_schema_frame),
+        ("decode_error", _truncated_frame),
+    ],
+    ids=["missing_id", "unknown_schema", "decode_error"],
+)
+def test_missing_id_aborts_batch(spark, dirs, error, make_frame):
+    """ReplicationApplication.java:71 NPE parity: a record without id —
+    or one whose frame names an unknown schema or does not parse — fails
+    the whole batch with an error naming its class; nothing is committed
+    (R8 all-or-nothing)."""
     src_reg, tgt_reg = _fresh_registries()
-    bad_schema = {
-        "type": "record", "name": "NoId",
-        "fields": [{"name": "other", "type": "string"}],
-    }
-    R.write_envelope_fixture(
-        spark, [{"other": "x"}], dirs["src"], "source-topic-a", src_reg, bad_schema
-    )
-    with pytest.raises(Exception):
+    row = (None, make_frame(src_reg), "source-topic-a", 0, 0, dt.datetime(2024, 1, 1))
+    spark.createDataFrame([row], R.KAFKA_ENVELOPE).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(dirs["src"])
+    with pytest.raises(Exception, match=f"offset 0: {error} - aborting batch"):
         R.replicate_stream(
             spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
-            "target-topic-b", bad_schema, dirs["ckpt"], timeout_sec=60,
+            "target-topic-b", None, dirs["ckpt"], timeout_sec=60,
         )
     assert R.read_committed(spark, dirs["tgt"]).count() == 0
+
+
+def test_dlq_transform_routes_all_three_error_classes(spark):
+    """replicate_transform: unknown_schema / decode_error /
+    missing_id classification plus byte-correct passthrough of good
+    records — on hand-crafted frames (one of each corruption, one good,
+    one record whose SCHEMA legitimately lacks the id field)."""
+    scope = uuid.uuid4().hex[:8]
+    reg = MockSchemaRegistry.get_scope(f"dlq-{scope}")
+    tgt = MockSchemaRegistry.get_scope(f"dlqt-{scope}")
+    try:
+        sid = reg.register("t-value", R.FOO_SCHEMA)
+        noid_schema = {
+            "type": "record",
+            "name": "NoId",
+            "fields": [{"name": "name", "type": "string"}],
+        }
+        sid_noid = reg.register("t-noid", noid_schema)
+        good = avro_codec.serialize_confluent({"id": "7", "name": "x"}, R.FOO_SCHEMA, sid)
+        unknown = avro_codec.serialize_confluent({"id": "8", "name": "y"}, R.FOO_SCHEMA, 999)
+        truncated = good[:3]
+        noid = avro_codec.serialize_confluent({"name": "z"}, noid_schema, sid_noid)
+        ts = dt.datetime(2024, 1, 1)
+        rows = [
+            (None, good, "t", 0, 0, ts),
+            (None, unknown, "t", 0, 1, ts),
+            (None, truncated, "t", 0, 2, ts),
+            (None, noid, "t", 0, 3, ts),
+        ]
+        env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+        key_id = tgt.register("t2-key", R.STRING_SCHEMA)
+        mapping = {
+            src_id: tgt.register("t2-value", schema)
+            for src_id, schema in reg.snapshot().items()
+        }
+        out = R.replicate_transform(
+            env, reg.snapshot(), "t2", key_id, mapping
+        ).collect()
+        by_off = {r["offset"]: r for r in out}
+        assert by_off[0]["error"] is None
+        assert by_off[1]["error"] == "unknown_schema"
+        assert by_off[2]["error"] == "decode_error"
+        assert by_off[3]["error"] == "missing_id"
+        # good record: key is Avro-framed str(id), value decodes byte-correct
+        _, key = avro_codec.deserialize_confluent(bytes(by_off[0]["key"]), tgt.snapshot())
+        assert key == "7"
+        _, rec = avro_codec.deserialize_confluent(bytes(by_off[0]["value"]), tgt.snapshot())
+        assert rec == {"id": "7", "name": "x"}
+        # the shared envelope schema must not have been mutated
+        assert [f.name for f in R.KAFKA_ENVELOPE.fields][-1] != "error"
+    finally:
+        MockSchemaRegistry.drop_scope(f"dlq-{scope}")
+        MockSchemaRegistry.drop_scope(f"dlqt-{scope}")
+
+
+def test_timeout_raises_and_rerun_commits_exactly_once(spark, dirs):
+    """A run that does not finish within timeout_sec is stopped and raises
+    instead of returning as if it succeeded; a rerun on the same
+    checkpoint commits every record exactly once."""
+    src_reg, tgt_reg = _fresh_registries()
+    records = [{"id": str(i), "name": f"n{i}"} for i in range(20)]
+    R.write_envelope_fixture(
+        spark, records, dirs["src"], "source-topic-a", src_reg, R.FOO_SCHEMA
+    )
+    with pytest.raises(TimeoutError):
+        R.replicate_stream(
+            spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
+            "target-topic-b", R.FOO_SCHEMA, dirs["ckpt"], timeout_sec=0.001,
+        )
+    R.replicate_stream(
+        spark, dirs["src"], dirs["tgt"], src_reg, tgt_reg,
+        "target-topic-b", R.FOO_SCHEMA, dirs["ckpt"],
+    )
+    out = R.decode_envelope(
+        R.read_committed(spark, dirs["tgt"]), tgt_reg.snapshot(), R.FOO_SCHEMA
+    ).collect()
+    assert sorted(r["id"] for r in out) == sorted(r["id"] for r in records)
 
 
 def test_idempotent_replay_of_committed_batch(spark, dirs):
