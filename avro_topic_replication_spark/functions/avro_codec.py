@@ -73,13 +73,22 @@ def _read_long(buf: io.BytesIO) -> int:
 # ---------------------------------------------------------------------------
 # schema helpers
 # ---------------------------------------------------------------------------
+PRIMITIVES = frozenset(
+    ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
+)
+
+
 def parse_schema(schema: str | dict | list) -> dict | list | str:
-    """Accept a JSON string or already-parsed schema; return parsed form."""
+    """Accept a JSON string or already-parsed schema; return parsed form.
+    A bare primitive name comes back unchanged (``json.loads("null")``
+    would turn the null schema into ``None``)."""
     if isinstance(schema, str):
+        if schema in PRIMITIVES:
+            return schema
         try:
             return json.loads(schema)
         except json.JSONDecodeError:
-            return schema  # bare primitive name like "string"
+            return schema  # a named-type reference
     return schema
 
 
@@ -279,6 +288,145 @@ def deserialize_confluent(data: bytes, schemas_by_id: dict):
             "(topic schema evolved; restart the query)"
         )
     return sid, decode(payload, schemas_by_id[sid])
+
+
+# ---------------------------------------------------------------------------
+# zero-decode walk: check a payload re-encodes to itself without decoding
+# ---------------------------------------------------------------------------
+# A skipper takes (data, pos, end) and returns the position after one
+# value at ``data[pos]``, or -1 unless ``encode(decode(value))`` would
+# write those bytes back unchanged.
+def _read_canonical_long(data: bytes, pos: int, end: int) -> tuple[int, int]:
+    """(value, position after it) of the zigzag varint at ``data[pos]``,
+    or (0, -1) unless ``_write_long`` writes it back unchanged: complete
+    before ``end``, at most 10 bytes, no redundant high zero group, and
+    below 2**64."""
+    if pos < end and data[pos] < 0x80:  # one-byte fast path
+        b = data[pos]
+        return (b >> 1) ^ -(b & 1), pos + 1
+    result = shift = 0
+    for i in range(pos, min(pos + 10, end)):
+        b = data[i]
+        result |= (b & 0x7F) << shift
+        if b < 0x80:  # a last byte past the first one: zero is redundant
+            if b == 0 or result >> 64:
+                return 0, -1
+            return _zigzag_decode(result), i + 1
+        shift += 7
+    return 0, -1
+
+
+def _skip_null(data: bytes, pos: int, end: int) -> int:
+    return pos
+
+
+def _skip_boolean(data: bytes, pos: int, end: int) -> int:
+    return pos + 1 if pos < end and data[pos] <= 1 else -1
+
+
+def _skip_long(data: bytes, pos: int, end: int) -> int:
+    return _read_canonical_long(data, pos, end)[1]
+
+
+def _skip_bytes(data: bytes, pos: int, end: int) -> int:
+    n, pos = _read_canonical_long(data, pos, end)
+    return pos + n if pos >= 0 and 0 <= n <= end - pos else -1
+
+
+def _skip_string(data: bytes, pos: int, end: int) -> int:
+    n, pos = _read_canonical_long(data, pos, end)
+    if pos < 0 or not 0 <= n <= end - pos:
+        return -1
+    try:
+        data[pos : pos + n].decode("utf-8")
+    except UnicodeDecodeError:
+        return -1
+    return pos + n
+
+
+_SKIPPERS = {
+    "null": _skip_null,
+    "boolean": _skip_boolean,
+    "int": _skip_long,
+    "long": _skip_long,
+    "bytes": _skip_bytes,
+    "string": _skip_string,
+}
+
+# Union branches the encoder tells apart (_union_branch_matches): it picks
+# the FIRST branch matching the decoded value, so a union whose branches
+# share a class (int and long) may re-encode under another index.
+_UNION_CLASS = {"null": 0, "boolean": 1, "int": 2, "long": 2, "bytes": 3, "string": 4}
+
+
+def _skipper(schema):
+    t = _schema_type(schema)
+    if t != "union":
+        return _SKIPPERS.get(t) if isinstance(t, str) else None
+    types = [_schema_type(b) for b in schema]
+    if not all(isinstance(bt, str) and bt in _SKIPPERS for bt in types):
+        return None
+    if len({_UNION_CLASS[bt] for bt in types}) != len(types):
+        return None
+    branches = [_SKIPPERS[bt] for bt in types]
+
+    def skip_union(data: bytes, pos: int, end: int) -> int:
+        i, pos = _read_canonical_long(data, pos, end)
+        if pos < 0 or not 0 <= i < len(branches):
+            return -1
+        return branches[i](data, pos, end)
+
+    return skip_union
+
+
+def compile_id_walker(schema):
+    """Compile a record schema into ``walk(data, pos) -> (start, stop) |
+    None``, or return None when the schema has a type the walker does not
+    cover (anything but a flat record of null / boolean / int / long /
+    bytes / string and unions of those with distinguishable branches) or
+    no field ``id`` typed exactly ``"string"``.
+
+    ``walk`` checks the Avro payload ``data[pos:]`` without decoding it
+    and returns the span of the ``id`` field's encoding (length prefix and
+    UTF-8 bytes) only when ``encode(decode(payload))`` gives back the
+    payload byte for byte: every varint canonical and at most 10 bytes,
+    every string valid UTF-8 inside the payload, every union index in
+    range, every boolean byte 0 or 1, and the walk ending exactly at the
+    end of ``data``. Otherwise it returns None."""
+    schema = parse_schema(schema)
+    if not isinstance(schema, dict) or schema.get("type") != "record":
+        return None
+    try:
+        fields = schema["fields"]
+        names = [f["name"] for f in fields]
+        skips = [_skipper(f["type"]) for f in fields]
+    except (KeyError, TypeError):
+        return None  # malformed: the full path classifies each record
+    if names.count("id") != 1 or len(set(names)) != len(names):
+        return None
+    k = names.index("id")
+    if fields[k]["type"] != "string" or None in skips:
+        return None
+    before, after = skips[:k], skips[k + 1 :]
+
+    def walk(data: bytes, pos: int = 0):
+        end = len(data)
+        for skip in before:
+            pos = skip(data, pos, end)
+            if pos < 0:
+                return None
+        start = pos
+        pos = _skip_string(data, pos, end)
+        if pos < 0:
+            return None
+        stop = pos
+        for skip in after:
+            pos = skip(data, pos, end)
+            if pos < 0:
+                return None
+        return (start, stop) if pos == end else None
+
+    return walk
 
 
 # ---------------------------------------------------------------------------

@@ -16,17 +16,24 @@ Spark mapping implemented here:
 | R2 | isolation read-committed           | read_committed() — only          |
 |    | (application.yml:10)               | marker-committed batches visible |
 | R3 | KafkaAvroDeserializer              | replicate_transform: ONE Arrow-  |
-|    | (application.yml:12)               | batched pass decodes against a   |
-|    |                                    | plan-time registry snapshot and  |
-|    |                                    | classifies every row: error NULL |
-|    |                                    | or unknown_schema / decode_error |
-|    |                                    | / missing_id                     |
-| R4 | consumerRecord.get("id") (:71)     | record["id"] in the same pass    |
-| R5 | re-key with id.toString() (:70-71) | key = Confluent-framed Avro      |
-|    |                                    | string of id (serde parity)      |
-| R6 | KafkaAvroSerializer + auto-register| encode in the same pass; one     |
-|    | (application.yml:15-16,README:27)  | plan-time register() step        |
-|    |                                    | (plan_routing) for both policies |
+|    | (application.yml:12)               | batched pass over frame bytes: a |
+|    |                                    | plan-time walker per snapshot    |
+|    |                                    | schema validates the payload;    |
+|    |                                    | the rest decode in full and      |
+|    |                                    | classify: error NULL or          |
+|    |                                    | unknown_schema / decode_error /  |
+|    |                                    | missing_id                       |
+| R4 | consumerRecord.get("id") (:71)     | the walker's span of id, or      |
+|    |                                    | record["id"] on the full path    |
+| R5 | re-key with id.toString() (:70-71) | key = key header + the payload's |
+|    |                                    | own Avro string of id (serde     |
+|    |                                    | parity); full path: encode       |
+|    |                                    | str(id)                          |
+| R6 | KafkaAvroSerializer + auto-register| value = target header + the      |
+|    | (application.yml:15-16,README:27)  | unchanged payload; full path:    |
+|    |                                    | re-encode. One plan-time         |
+|    |                                    | register() step (plan_routing)   |
+|    |                                    | for both policies                |
 | R7 | executeInTransaction (:66-78)      | foreachBatch: write data, then   |
 |    |                                    | atomically create commit marker  |
 |    |                                    | (one helper for both sinks)      |
@@ -52,6 +59,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,7 +133,8 @@ def kafka_source_options(bootstrap: str, topic: str) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# R3–R6: decode → re-key → encode, one classifying Arrow-batched pass
+# R3–R6: validate/slice (or decode → re-key → encode), one classifying
+# Arrow-batched pass
 # ---------------------------------------------------------------------------
 # The kernel's output: the envelope plus the row's error class (NULL for a
 # replicated record). A fresh field list: StructType.add would mutate the
@@ -133,6 +142,65 @@ def kafka_source_options(bootstrap: str, topic: str) -> dict[str, str]:
 DLQ_ENVELOPE = StructType(
     KAFKA_ENVELOPE.fields + [StructField("error", StringType(), True)]
 )
+
+
+def replicate_record(raw, snapshot: dict, key_schema_id: int, mapping: dict):
+    """The full path for one source frame: decode it, extract ``id``,
+    re-encode key and value. Returns ``(key, value, error)``: the framed
+    key and value with error None, or (None, None, class) with class
+    ``unknown_schema`` (frame carries a schema id absent from the
+    plan-time registry snapshot — KeyError), ``decode_error`` (malformed
+    frame/payload) or ``missing_id`` (decoded record lacks the re-key
+    field). Every error class is produced here."""
+    try:
+        src_id, record = avro_codec.deserialize_confluent(bytes(raw), snapshot)
+        if not isinstance(record, dict) or record.get("id") is None:
+            raise LookupError("missing_id")
+        key = avro_codec.serialize_confluent(
+            str(record["id"]), STRING_SCHEMA, key_schema_id
+        )
+        value = avro_codec.serialize_confluent(
+            record, snapshot[src_id], mapping[src_id]
+        )
+        return key, value, None
+    except KeyError:
+        return None, None, "unknown_schema"
+    except LookupError:
+        return None, None, "missing_id"
+    except Exception:
+        return None, None, "decode_error"
+
+
+def record_kernel(schemas_by_id: dict, key_schema_id: int, id_mapping: dict):
+    """Compile the per-record function of ``replicate_transform``:
+    ``replicate(raw) -> (key, value, error)``, equal to
+    ``replicate_record`` on every input.
+
+    Each snapshot schema is compiled into an id walker
+    (``avro_codec.compile_id_walker``). A frame whose schema has a walker
+    and whose payload the walker accepts is copied, not decoded: the
+    target registry holds the source schema's own text, so the re-encoded
+    value is the payload byte for byte under the target header, and the
+    key is the payload's own encoding of ``id`` under the key header.
+    Every other frame takes ``replicate_record``."""
+    snapshot, mapping = dict(schemas_by_id), dict(id_mapping)
+    key_header = avro_codec.frame(key_schema_id, b"")
+    passthrough = {}  # source schema id → (walker, target value header)
+    for sid, schema in snapshot.items():
+        walk = avro_codec.compile_id_walker(schema)
+        if walk is not None and sid in mapping:
+            passthrough[sid] = (walk, avro_codec.frame(mapping[sid], b""))
+
+    def replicate(raw):
+        if raw is not None and len(raw) >= 5 and raw[0] == 0:
+            hit = passthrough.get(int.from_bytes(raw[1:5], "big"))
+            if hit is not None:
+                span = hit[0](raw, 5)
+                if span is not None:
+                    return key_header + raw[span[0] : span[1]], hit[1] + raw[5:], None
+        return replicate_record(raw, snapshot, key_schema_id, mapping)
+
+    return replicate
 
 
 def replicate_transform(
@@ -143,76 +211,46 @@ def replicate_transform(
     id_mapping: dict,
 ) -> DataFrame:
     """The record transform of the pipeline: for each source envelope row,
-    decode the Confluent-framed value, extract ``id``, emit the target
-    envelope with key = Avro-string(id) framed for the target registry and
-    value re-encoded under ITS OWN schema's target-registry id
+    emit the target envelope with key = Avro-string(id) framed for the
+    target registry and value under ITS OWN schema's target-registry id
     (``id_mapping``: source schema id → target schema id). Per-record
     schema dispatch mirrors the GenericRecord serde of the reference — a
     topic carrying several schema versions replicates each record under
     the matching propagated schema, exactly like KafkaAvroSerializer.
 
-    One mapInPandas pass — the distributed analog of the reference's
-    single listener loop (ReplicationApplication.java:63-78), preserving
-    (partition, offset) passthrough for downstream dedup/audit. Every row
-    is classified into the ``error`` column of ``DLQ_ENVELOPE``: NULL for
-    a replicated record, else ``unknown_schema`` (frame carries a schema
-    id absent from the plan-time registry snapshot — KeyError),
-    ``decode_error`` (malformed frame/payload) or ``missing_id`` (decoded
-    record lacks the re-key field); such rows pass through with NULL
-    key/value. The failure policy is applied downstream of this pass:
-    ``plan_replication`` aborts the batch on the first classified row,
-    the DLQ paths split on ``error`` (both partition-local, no shuffle).
+    One mapInArrow pass — the distributed analog of the reference's
+    single listener loop (ReplicationApplication.java:63-78) — runs the
+    plan-time compiled ``record_kernel`` on every value: frame bytes are
+    sliced where the schema allows it, decoded and re-encoded otherwise.
+    (partition, offset, timestamp) pass through as Arrow arrays for
+    downstream dedup/audit. Every row is classified into the ``error``
+    column of ``DLQ_ENVELOPE`` (see ``replicate_record``); a classified
+    row passes through with NULL key/value. The failure policy is applied
+    downstream of this pass: ``plan_replication`` aborts the batch on the
+    first classified row, the DLQ paths split on ``error`` (both
+    partition-local, no shuffle).
     """
-    snapshot = dict(schemas_by_id)
-    mapping = dict(id_mapping)
+    replicate = record_kernel(schemas_by_id, key_schema_id, id_mapping)
+    names = DLQ_ENVELOPE.fieldNames()
 
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, values, errors = [], [], []
-            for raw in pdf["value"]:
-                try:
-                    src_id, record = avro_codec.deserialize_confluent(
-                        bytes(raw), snapshot
-                    )
-                    if (
-                        not isinstance(record, dict)
-                        or record.get("id") is None
-                    ):
-                        raise LookupError("missing_id")
-                    rid = str(record["id"])
-                    keys.append(
-                        avro_codec.serialize_confluent(
-                            rid, STRING_SCHEMA, key_schema_id
-                        )
-                    )
-                    values.append(
-                        avro_codec.serialize_confluent(
-                            record, snapshot[src_id], mapping[src_id]
-                        )
-                    )
-                    errors.append(None)
-                except KeyError:
-                    keys.append(None); values.append(None)
-                    errors.append("unknown_schema")
-                except LookupError:
-                    keys.append(None); values.append(None)
-                    errors.append("missing_id")
-                except Exception:
-                    keys.append(None); values.append(None)
-                    errors.append("decode_error")
-            yield pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": values,
-                    "topic": target_topic,
-                    "partition": pdf["partition"],
-                    "offset": pdf["offset"],
-                    "timestamp": pdf["timestamp"],
-                    "error": errors,
-                }
+    def transform(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = [replicate(raw) for raw in batch.column("value").to_pylist()]
+            keys, values, errors = zip(*out) if out else ((), (), ())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(keys, pa.binary()),
+                    pa.array(values, pa.binary()),
+                    pa.repeat(pa.scalar(target_topic, pa.string()), len(out)),
+                    batch.column("partition"),
+                    batch.column("offset"),
+                    batch.column("timestamp"),
+                    pa.array(errors, pa.string()),
+                ],
+                names=names,
             )
 
-    return env.mapInPandas(transform, schema=DLQ_ENVELOPE)
+    return env.mapInArrow(transform, schema=DLQ_ENVELOPE)
 
 
 def plan_routing(

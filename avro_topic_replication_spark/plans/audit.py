@@ -15,7 +15,7 @@ Signals and why they matter at scale:
 - ``cartesian``            CartesianProduct = all-pairs blowup
 - ``row_python_udf``       BatchEvalPython = row-at-a-time Python on the
                            hot path (Arrow stages show as ArrowEvalPython /
-                           MapInPandas instead)
+                           MapInPandas / MapInArrow instead)
 - ``broadcasts``           BroadcastHashJoin count — dims should broadcast
 - ``pushed_filters``       predicates that reached the parquet scan
 - ``scans``                number of FileScan nodes (a rescan of the same
@@ -49,7 +49,8 @@ def audit_plan(plan: str) -> dict:
         "single_partition": plan.count("Exchange SinglePartition"),
         "cartesian": plan.count("CartesianProduct"),
         "row_python_udf": plan.count("BatchEvalPython"),
-        "arrow_python": plan.count("ArrowEvalPython") + plan.count("MapInPandas"),
+        "arrow_python": plan.count("ArrowEvalPython") + plan.count("MapInPandas")
+        + plan.count("MapInArrow"),
         "broadcasts": plan.count("BroadcastHashJoin"),
         "sort_merge_joins": plan.count("SortMergeJoin"),
         "pushed_filters": plan.count("PushedFilters: ["),

@@ -95,6 +95,20 @@ def test_codec_long_roundtrip(n):
     assert avro_codec.decode(avro_codec.encode(n, "long"), "long") == n
 
 
+@pytest.mark.parametrize(
+    "schema, datum",
+    [
+        ("null", None), ("boolean", True), ("int", -42), ("long", 1 << 40),
+        ("float", 1.5), ("double", -2.25), ("bytes", b"\x00\xff"), ("string", "héllo"),
+    ],
+)
+def test_codec_bare_primitive_roundtrip(schema, datum):
+    """A bare primitive name is a schema on its own: parse_schema must not
+    turn "null" into None via json.loads."""
+    assert avro_codec.parse_schema(schema) == schema
+    assert avro_codec.decode(avro_codec.encode(datum, schema), schema) == datum
+
+
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -275,6 +289,258 @@ def test_dlq_transform_routes_all_three_error_classes(spark):
     finally:
         MockSchemaRegistry.drop_scope(f"dlq-{scope}")
         MockSchemaRegistry.drop_scope(f"dlqt-{scope}")
+
+
+# ---------------------------------------------------------------------------
+# zero-decode kernel: the passthrough equals the full path on every frame
+# ---------------------------------------------------------------------------
+# A Foo-only topic: v1 under source id 1, v2 under 2; target ids differ so
+# a slice that forgets the header rewrite shows.
+KERNEL_SNAPSHOT = {1: R.FOO_SCHEMA, 2: R.FOO_SCHEMA_V2}
+KERNEL_MAPPING = {1: 101, 2: 102}
+KERNEL_KEY_ID = 100
+
+
+def _full_path(raw):
+    return R.replicate_record(raw, KERNEL_SNAPSHOT, KERNEL_KEY_ID, KERNEL_MAPPING)
+
+
+def _varint(n: int, pad: int = 0) -> bytes:
+    """Zigzag varint of ``n``; ``pad`` > 0 appends that many redundant
+    groups (an overlong, non-canonical encoding of the same value)."""
+    out = avro_codec.encode(n, "long")
+    if pad:
+        out = out[:-1] + bytes([out[-1] | 0x80]) + b"\x80" * (pad - 1) + b"\x00"
+    return out
+
+
+INVALID_UTF8 = [b"\xff", b"a\x80", b"\xc0\x80", b"\xed\xa0\x80", b"\xf4\x90\x80\x80"]
+VARINTS = ("id_len", "index", "name_len", "tag_len")
+_text = st.one_of(
+    st.just(""),
+    st.text(max_size=8),
+    st.text(min_size=64, max_size=300),
+    st.text(alphabet="héß€😀", min_size=1, max_size=12),
+)
+_utf8_or_invalid = st.one_of(_text.map(str.encode), st.sampled_from(INVALID_UTF8))
+
+
+@st.composite
+def _foo_frames(draw):
+    """Frames of v1/v2 Foo records built byte by byte, valid or with one
+    corruption: truncation, trailing bytes, an overlong varint, invalid
+    UTF-8, an out-of-range union index, a bad magic byte, an unknown
+    schema id, or random payload bytes."""
+    id_b, tag_b = draw(_utf8_or_invalid), draw(_utf8_or_invalid)
+    name_b = draw(st.one_of(st.none(), _utf8_or_invalid))
+    v2 = draw(st.booleans())
+    pads = dict.fromkeys(VARINTS, 0)
+    index = 0 if name_b is None else 1
+    kind = draw(st.sampled_from(
+        ["valid", "truncate", "trailing", "overlong", "union", "magic", "unknown", "fuzz"]
+    ))
+    if kind == "overlong":
+        pads[draw(st.sampled_from(VARINTS))] = draw(st.integers(1, 10))
+    if kind == "union":
+        index = draw(st.sampled_from([-2, -1, 2, 3, 64]))
+    payload = _varint(len(id_b), pads["id_len"]) + id_b + _varint(index, pads["index"])
+    if name_b is not None:
+        payload += _varint(len(name_b), pads["name_len"]) + name_b
+    if v2:
+        payload += _varint(len(tag_b), pads["tag_len"]) + tag_b
+    if kind == "fuzz":
+        payload = draw(st.binary(max_size=40))
+    sid = 999 if kind == "unknown" else (2 if v2 else 1)
+    frame = avro_codec.frame(sid, payload)
+    if kind == "truncate":
+        frame = frame[: draw(st.integers(0, len(frame) - 1))]
+    elif kind == "trailing":
+        frame += draw(st.binary(min_size=1, max_size=4))
+    elif kind == "magic":
+        frame = draw(st.integers(1, 255)).to_bytes(1, "big") + frame[1:]
+    return frame
+
+
+@given(_foo_frames())
+@settings(max_examples=600, deadline=None)
+def test_kernel_matches_full_path_on_foo_frames(frame):
+    """Differential: the compiled per-record kernel returns exactly the
+    full decode/encode path's (key, value, error) on valid and corrupted
+    frames alike."""
+    kernel = R.record_kernel(KERNEL_SNAPSHOT, KERNEL_KEY_ID, KERNEL_MAPPING)
+    assert kernel(frame) == _full_path(frame)
+
+
+WIDE_SCHEMA = {
+    "type": "record", "name": "Wide",
+    "fields": [
+        {"name": "b", "type": "boolean"},
+        {"name": "i", "type": "int"},
+        {"name": "id", "type": "string"},
+        {"name": "l", "type": "long"},
+        {"name": "by", "type": "bytes"},
+        {"name": "n", "type": "null"},
+        {"name": "u", "type": ["null", "long", "string", "bytes", "boolean"]},
+    ],
+}
+_long = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+
+
+@given(
+    st.fixed_dictionaries({
+        "b": st.booleans(), "i": st.integers(-(2**31), 2**31 - 1), "id": _text,
+        "l": _long, "by": st.binary(max_size=20), "n": st.none(),
+        "u": st.one_of(st.none(), _long, _text, st.binary(max_size=8), st.booleans()),
+    }),
+    st.lists(st.tuples(st.integers(0, 200), st.integers(0, 255)), max_size=3),
+    st.integers(0, 3),
+)
+@settings(max_examples=400, deadline=None)
+def test_kernel_matches_full_path_on_mutated_wide_records(datum, flips, cut):
+    """Differential over every type the walker covers: a valid record
+    under a schema with the id between other fields, then bytes
+    overwritten and the tail cut or extended."""
+    frame = bytearray(avro_codec.serialize_confluent(datum, WIDE_SCHEMA, 7))
+    for pos, byte in flips:
+        frame[5 + pos % max(1, len(frame) - 5)] = byte
+    frame = bytes(frame[: len(frame) - cut] if cut < 2 else frame + b"\x00" * (cut - 1))
+    snapshot, mapping = {7: WIDE_SCHEMA}, {7: 70}
+    kernel = R.record_kernel(snapshot, KERNEL_KEY_ID, mapping)
+    assert kernel(frame) == R.replicate_record(frame, snapshot, KERNEL_KEY_ID, mapping)
+
+
+def _foo_records():
+    return [
+        (1, {"id": "7", "name": None}),
+        (1, {"id": str(uuid.UUID(int=7)), "name": "short"}),
+        (1, {"id": "é€😀", "name": "x" * 300}),
+        (2, {"id": "", "name": "naïve", "tag": "t"}),
+    ]
+
+
+def test_kernel_slices_valid_frames_and_matches_every_truncation(monkeypatch):
+    """Valid v1/v2 frames never reach the full path; every truncation of
+    them, a NULL value and an empty value come out exactly as the full
+    path writes them."""
+    frames = [
+        avro_codec.serialize_confluent(rec, KERNEL_SNAPSHOT[sid], sid)
+        for sid, rec in _foo_records()
+    ]
+    kernel = R.record_kernel(KERNEL_SNAPSHOT, KERNEL_KEY_ID, KERNEL_MAPPING)
+    expected = [_full_path(f) for f in frames]
+    for f in frames:
+        for cut in range(len(f)):
+            assert kernel(f[:cut]) == _full_path(f[:cut]), (f, cut)
+    assert kernel(None) == _full_path(None) == (None, None, "decode_error")
+
+    def full_path_called(*args):
+        raise AssertionError("a valid frame took the full path")
+
+    monkeypatch.setattr(R, "replicate_record", full_path_called)
+    assert [kernel(f) for f in frames] == expected
+    assert all(error is None for _, _, error in expected)
+
+
+def test_walker_varint_bounds():
+    """Ten-byte varints are accepted up to 2**64 - 1 (the int64 extremes
+    re-encode to themselves); a larger value, an eleventh byte or a
+    redundant zero group is declined."""
+    walk = avro_codec.compile_id_walker(
+        {"type": "record", "name": "L",
+         "fields": [{"name": "id", "type": "string"}, {"name": "l", "type": "long"}]}
+    )
+    id_enc = _varint(1) + b"a"
+    for n in (-(2**63), 2**63 - 1, 0, -1, 63, -64, 64):
+        assert walk(id_enc + _varint(n)) == (0, 2)
+    top = _varint(2**63 - 1)  # zigzag 2**64 - 2: ten bytes ending in 0x01
+    assert len(top) == 10 and top[-1] == 0x01
+    assert walk(id_enc + top[:-1] + b"\x02") is None  # 2**64 and above
+    assert walk(id_enc + top[:-1] + b"\x81\x00") is None  # eleven bytes
+    assert walk(id_enc + _varint(5, pad=1)) is None
+
+
+def _record(*fields):
+    return {"type": "record", "name": "R",
+            "fields": [{"name": n, "type": t} for n, t in fields]}
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        "string",
+        _record(("other", "string")),
+        _record(("id", "long")),
+        _record(("id", ["null", "string"])),
+        _record(("id", {"type": "string"})),
+        _record(("id", "string"), ("id", "string")),
+        _record(("id", "string"), ("f", "float")),
+        _record(("id", "string"), ("u", ["null", "int", "long"])),
+        _record(("id", "string"), ("u", ["null", ["null", "string"]])),
+        _record(("id", "string"), ("e", {"type": "enum", "name": "E", "symbols": ["A"]})),
+        _record(("id", "string"), ("a", {"type": "array", "items": "string"})),
+        _record(("id", "string"), ("m", {"items": "string"})),
+    ],
+    ids=["bare-string", "no-id", "long-id", "union-id", "dict-id", "duplicate-id",
+         "float", "int-long-union", "nested-union", "enum", "array", "malformed"],
+)
+def test_walker_declines_uncovered_schemas(schema):
+    """No walker (every record takes the full path) unless the schema is a
+    well-formed flat record of covered types with exactly one id typed
+    "string" and unions whose branches the encoder tells apart."""
+    assert avro_codec.compile_id_walker(schema) is None
+
+
+LONG_ID_SCHEMA = {
+    "type": "record", "name": "LongId",
+    "fields": [{"name": "id", "type": "long"}, {"name": "name", "type": "string"}],
+}
+NESTED_SCHEMA = {
+    "type": "record", "name": "Nested",
+    "fields": [
+        {"name": "id", "type": "string"},
+        {"name": "inner", "type": {"type": "record", "name": "Inner",
+                                   "fields": [{"name": "x", "type": "long"}]}},
+        {"name": "tags", "type": {"type": "array", "items": "string"}},
+    ],
+}
+
+
+def test_declined_schemas_replicate_through_full_path(spark):
+    """Schemas the walker declines (id typed long; a nested record and an
+    array field) replicate through plan_routing with key = Avro string of
+    str(id) and the full path's value encoding; a Foo frame with trailing
+    bytes after a valid payload comes out as the full path writes it,
+    trailing bytes dropped."""
+    assert avro_codec.compile_id_walker(LONG_ID_SCHEMA) is None
+    assert avro_codec.compile_id_walker(NESTED_SCHEMA) is None
+    scope = uuid.uuid4().hex[:8]
+    src = MockSchemaRegistry.get_scope(f"fb-{scope}")
+    tgt = MockSchemaRegistry.get_scope(f"fbt-{scope}")
+    try:
+        cases = [
+            (LONG_ID_SCHEMA, {"id": -12345678901, "name": "n"}, b""),
+            (NESTED_SCHEMA, {"id": "k", "inner": {"x": 3}, "tags": ["a", "b"]}, b""),
+            (R.FOO_SCHEMA, {"id": "t", "name": "x"}, b"\x00junk"),
+        ]
+        ts = dt.datetime(2024, 1, 1)
+        rows = []
+        for off, (schema, rec, trailing) in enumerate(cases):
+            sid = src.register("t-value", schema)
+            rows.append((None, avro_codec.serialize_confluent(rec, schema, sid) + trailing,
+                         "t", 0, off, ts))
+        env = spark.createDataFrame(rows, R.KAFKA_ENVELOPE)
+        out = {r["offset"]: r for r in R.plan_routing(env, src, tgt, "t2").collect()}
+        key_id = tgt.latest("t2-key")[0]
+        for off, (schema, rec, _) in enumerate(cases):
+            row = out[off]
+            assert row["error"] is None
+            assert bytes(row["key"]) == avro_codec.serialize_confluent(
+                str(rec["id"]), "string", key_id)
+            target_id = tgt.register("t2-value", schema)  # idempotent lookup
+            assert bytes(row["value"]) == avro_codec.serialize_confluent(rec, schema, target_id)
+    finally:
+        MockSchemaRegistry.drop_scope(f"fb-{scope}")
+        MockSchemaRegistry.drop_scope(f"fbt-{scope}")
 
 
 def test_timeout_raises_and_rerun_commits_exactly_once(spark, dirs):

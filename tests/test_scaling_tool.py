@@ -1,7 +1,8 @@
 """Unit tests for tools/scaling_analysis.py (SCALE.md r12): the
 first-difference exponent fit, the input-growth family classification
 (documents/embeddings are flat until sf0.1), and the super-linear exit
-gate. Spark-free — the registry import is exercised but no session."""
+gate; and for tools/core_scaling.py's argument check and partial report.
+Spark-free — the registry import is exercised but no session."""
 
 from __future__ import annotations
 
@@ -9,21 +10,30 @@ import importlib.util
 import json
 import math
 import os
+import subprocess
 
 import pytest
 
-_TOOL = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools", "scaling_analysis.py",
+_TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
 )
+
+
+def _load(name):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(_TOOLS, f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture()
 def tool():
-    spec = importlib.util.spec_from_file_location("scaling_analysis", _TOOL)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return _load("scaling_analysis")
+
+
+@pytest.fixture()
+def core_scaling():
+    return _load("core_scaling")
 
 
 def test_exponent_identity_for_power_law(tool):
@@ -93,3 +103,30 @@ def test_main_gates_on_super_linear(tool, tmp_path, monkeypatch, capsys):
     assert tool.main() == 1
     out = capsys.readouterr().out
     assert "SUPER-LINEAR" in out and "quad" in out
+
+
+@pytest.mark.parametrize("cpus", ["8", "8,16,32", "8,8", ""])
+def test_core_scaling_rejects_cpus_without_two_values(core_scaling, monkeypatch, cpus):
+    """run() reports one low and one high core count, so any other
+    --cpus list is refused before a child starts."""
+    monkeypatch.setattr(core_scaling, "run", lambda *a: pytest.fail("run() started"))
+    monkeypatch.setattr(core_scaling.sys, "argv", ["core_scaling.py", "run", "--cpus", cpus])
+    assert core_scaling.main() == 2
+    assert core_scaling.parse_cpus("32,8") == [8, 32]
+
+
+def test_core_scaling_prints_partial_table_when_a_child_fails(core_scaling, monkeypatch, capsys):
+    calls = []
+
+    def fake_child(cmd, env, **kw):
+        calls.append(env["SPARK_GRAFT_CPUS"])
+        if len(calls) == 1:
+            return subprocess.CompletedProcess(cmd, 0, '{"q": 2.0}\n', "")
+        return subprocess.CompletedProcess(cmd, 1, "", "boom")
+
+    monkeypatch.setattr(core_scaling.subprocess, "run", fake_child)
+    with pytest.raises(SystemExit, match="child at 32 cores failed"):
+        core_scaling.run(["q"], [8, 32], runs=1, passes=1)
+    out = json.loads(capsys.readouterr().out)
+    assert out["partial"] is True
+    assert out["queries"] == {"q": {"c8": 2.0, "c32": None, "ratio": None}}

@@ -22,6 +22,8 @@ the plain at-scale scan path.
 Usage:
     python tools/core_scaling.py build [--mult 5]
     python tools/core_scaling.py run [--cpus 8,32] [--runs 2] [QUERY ...]
+        (--cpus: exactly two core counts; a failed child prints the
+        partial table before exiting)
     python tools/core_scaling.py child QUERY...   # internal
 """
 
@@ -127,6 +129,9 @@ def build(mult: int) -> None:
                     # realistic instead of forcing mult-sized clusters)
                     c = c.withColumn(
                         "text", F.concat(F.lit(f"x{i} "), F.col("text"))
+                    ).withColumn(
+                        "n_chars",
+                        F.length("text").cast(dict(src.dtypes)["n_chars"]),
                     )
                 copies.append(c)
             out = copies[0]
@@ -174,12 +179,30 @@ def child(names: list[str], runs: int) -> None:
     print(json.dumps(out))
 
 
+def _table(results: dict[int, dict[str, float]], names: list[str],
+           cpus: list[int]) -> dict:
+    """Per-query times at both core counts and their ratio; a query not
+    (yet) timed at a core count reads None."""
+    lo, hi = cpus
+    table = {}
+    for n in names:
+        a, b = results[lo].get(n), results[hi].get(n)
+        table[n] = {f"c{lo}": a, f"c{hi}": b,
+                    "ratio": round(a / b, 2) if a is not None and b else None}
+    return table
+
+
 def run(names: list[str], cpus: list[int], runs: int, passes: int) -> None:
     # Alternate core counts across passes (8,32,8,32,…) and keep the min
     # per (cpu, query): container weather drifts on multi-minute scales,
     # so back-to-back same-order children bias the ratio — alternation
     # cancels it (the r12 interleaved-A/B lesson, applied to processes).
     results: dict[int, dict[str, float]] = {c: {} for c in cpus}
+
+    def report(**extra) -> None:
+        print(json.dumps({"cpus": cpus, "runs": runs, "passes": passes, **extra,
+                          "queries": _table(results, names, cpus)}, indent=1))
+
     for p_i in range(passes):
         for c in cpus:
             env = dict(os.environ)
@@ -193,23 +216,22 @@ def run(names: list[str], cpus: list[int], runs: int, passes: int) -> None:
             )
             sys.stderr.write(p.stderr[-2000:])
             if p.returncode != 0:
+                # keep what earlier children measured
+                report(partial=True)
                 sys.exit(f"child at {c} cores failed rc={p.returncode}")
             got = json.loads(p.stdout.strip().splitlines()[-1])
             for n, t in got.items():
                 prev = results[c].get(n)
                 results[c][n] = t if prev is None else min(prev, t)
-    lo, hi = min(cpus), max(cpus)
-    table = {
-        n: {
-            f"c{lo}": results[lo][n],
-            f"c{hi}": results[hi][n],
-            "ratio": round(results[lo][n] / results[hi][n], 2)
-            if results[hi][n] > 0 else None,
-        }
-        for n in names
-    }
-    print(json.dumps({"cpus": cpus, "runs": runs, "passes": passes,
-                      "queries": table}, indent=1))
+    report()
+
+
+def parse_cpus(text: str) -> list[int]:
+    """``--cpus``: exactly two distinct core counts, e.g. ``8,32``."""
+    cpus = [int(x) for x in text.split(",")]
+    if len(cpus) != 2 or cpus[0] == cpus[1]:
+        raise ValueError(f"--cpus takes two distinct core counts, got {text!r}")
+    return sorted(cpus)
 
 
 def main() -> int:
@@ -225,7 +247,11 @@ def main() -> int:
         if a == "--mult":
             mult = int(rest[i + 1]); i += 2
         elif a == "--cpus":
-            cpus = [int(x) for x in rest[i + 1].split(",")]; i += 2
+            try:
+                cpus = parse_cpus(rest[i + 1]); i += 2
+            except ValueError as e:
+                print(e, file=sys.stderr)
+                return 2
         elif a == "--runs":
             runs = int(rest[i + 1]); i += 2
         elif a == "--passes":
