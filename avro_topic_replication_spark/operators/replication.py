@@ -58,7 +58,6 @@ import os
 import time
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -554,6 +553,10 @@ def decode_envelope(
     """Consumer-side deserializer (KafkaAvroDeserializer analog used by
     the golden test to verify the target topic): key as Avro string,
     value decoded into typed columns of the Foo fixture shape."""
+    # Imported here: pandas costs ~0.3 s, and every fresh Python worker
+    # that runs the replication kernel imports this module.
+    import pandas as pd
+
     snapshot = dict(schemas_by_id)
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -16,7 +16,10 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import subprocess
+import sys
 import uuid
+import zipimport
 
 import pytest
 from hypothesis import given, settings
@@ -781,3 +784,52 @@ def test_observe_metrics_on_decode(spark, dirs):
     assert got["n_rows"] == 20
     assert 19 <= got["n_keys"] <= 21  # HLL estimate, exact at this cardinality
     assert got["n_null_names"] == 10
+
+
+def test_tasks_keep_zip_directories(spark):
+    """PySpark's worker calls importlib.invalidate_caches() at the start of
+    every task; before Python 3.13 each zipimporter then re-reads its
+    archive directory (pyspark.zip, py4j). Once a task has imported the
+    package, invalidate_caches() must read no zip directory, in that task
+    and in later tasks on the same worker; the driver keeps the stdlib
+    method."""
+
+    def count_rereads(batches):
+        import importlib
+        import zipimport as zi
+
+        import pyarrow as pa
+
+        import avro_topic_replication_spark  # noqa: F401
+
+        archives = []
+        read = zi._read_directory
+        zi._read_directory = lambda archive: archives.append(archive) or read(archive)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zi._read_directory = read
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"rereads": [len(archives)]})
+
+    # the second job's tasks run on the workers the first job released
+    for _ in range(2):
+        rows = spark.range(2, numPartitions=2).mapInArrow(count_rereads, "rereads long").collect()
+        assert [r["rereads"] for r in rows] == [0, 0]
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_kernel_module_import_leaves_pandas_unloaded():
+    """Every fresh worker that runs the replication kernel imports its
+    module; pandas (~0.3 s) is imported only by decode_envelope."""
+    code = (
+        "import sys\n"
+        "import avro_topic_replication_spark.operators.replication\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.stdout.strip() == "False"
